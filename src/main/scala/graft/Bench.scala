@@ -1,59 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // NOTE: measured A/B (2026-08-12): forcing post-shuffle coalescing
-      // (adaptive.coalescePartitions.parallelismFirst=false) costs ~8%
-      // here — with 32 idle cores the extra tiny tasks are free and
-      // coalescing only serializes. On a saturated cluster the tradeoff
-      // flips; leave the Spark default and tune per deployment.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     // ERROR: keep stdout clean for the driver's one-line JSON parse (the
     // benign single-partition WindowExec WARN from q21's ~25-row
     // post-aggregate frame would otherwise interleave with it)
-    spark.sparkContext.setLogLevel("ERROR")
-    // benign AQE late-accumulator ERRORs out of the captured tail; real
-    // stage-failure narrative keeps flowing (graft.tools.LogFilters,
-    // spec-pinned through a real log call)
-    tools.LogFilters.installAccumulatorFilter()
-    // Warmup (untimed): JVM/JIT/codegen spin-up, parquet footer reads, and
-    // the one-time docstore test-collection generation — data prep, not
-    // query time. A full pass at the smallest SF warms every kernel's JIT
-    // and codegen cache (steady-state benchmarking); queries then run in
-    // sorted key order so per-query timings are stable run-to-run.
-    // Official execution mode (VERDICT r10 #1): a noop-format WRITE —
-    // full materialization of every output column. count()'s Aggregate
-    // wrapper lets Catalyst prune columns and ELIMINATE unique-key
-    // joins whose output isn't projected: the round-10b A/B measured
-    // 1.28× of the suite's work (including t14's entire final join)
-    // invisible under count. Legacy count mode stays behind
-    // SPARK_GRAFT_BENCH_MODE=count for history archaeology only.
-    val mode = sys.env.getOrElse("SPARK_GRAFT_BENCH_MODE", "noop")
-    def exec(df: org.apache.spark.sql.DataFrame, m: String): Unit =
-      if (m == "count") df.count()
-      else df.write.format("noop").mode("overwrite").save()
-    def loadavg(): String =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-        .split(" ").take(3).mkString(" ")
-      catch { case _: Throwable => "" }
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    Tables.all.foreach(n => Tables(spark, sfDir, n).count())
-    operators.DocstoreOps.ensureEventDocs(spark, sfDir)
+    val spark = Harness.session("ERROR")
+    // Warmup (untimed): the shared prelude, then a full pass at the
+    // smallest SF warms every kernel's JIT and codegen cache
+    // (steady-state benchmarking); queries then run in sorted key order
+    // so per-query timings are stable run-to-run.
+    Harness.warm(spark, sfDir)
+    val queries = SparkEntry.queries
+    val keys = queries.keys.toSeq.sorted
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
       operators.DocstoreOps.ensureEventDocs(spark, warmDir)
-      // warm in the OFFICIAL mode: the noop-write plan differs from the
-      // count plan (no column pruning / join elimination), so warming
-      // the wrong shape leaves first-round codegen compile in the min
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-        try exec(fn(spark, warmDir), mode) catch { case _: Throwable => () }
+      // warm the OFFICIAL noop-write plans themselves, so no first-round
+      // codegen compile lands in the min
+      keys.foreach { k =>
+        try Harness.noop(queries(k)(spark, warmDir)) catch { case _: Throwable => () }
       }
     }
     // min AND p50 over 5 INTERLEAVED rounds per query: steady-state
@@ -63,66 +29,33 @@ object Bench {
     // apart. The minimum is the honest repeatable-latency estimator; the
     // median is published alongside so round-over-round deltas are not
     // hostage to one lucky/unlucky window.
-    val keys = SparkEntry.queries.toSeq.sortBy(_._1)
-    val samples = scala.collection.mutable.LinkedHashMap[String, List[Double]]()
-    val cpuSamples = scala.collection.mutable.LinkedHashMap[String, List[Double]]()
     // Executor CPU-time per query (VERDICT r9 #7): task-metrics CPU sums
     // are stable under the host's co-tenant wall-clock band, so
     // round-over-round regressions stay attributable when wall swings.
-    // Queries run sequentially, so a before/after counter delta
-    // attributes cleanly — PROVIDED the async listener bus is drained
-    // between reads: without the drain, a query's task-end tail posts
-    // after count() returns and double-attributes to the next key, and
-    // min-of-5 then systematically picks the most-undercounted sample
-    // (review r10). waitUntilEmpty is private[spark], which compiles to
-    // a public JVM method — reflected, with a no-drain fallback that
-    // only costs smear, never correctness.
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            cpuNs.addAndGet(t.taskMetrics.executorCpuTime)
-      })
-    val bus =
-      try Some(spark.sparkContext.getClass.getMethod("listenerBus")
-        .invoke(spark.sparkContext))
-      catch { case _: Throwable => None }
-    def drainListeners(): Unit = bus.foreach { b =>
-      try b.getClass.getMethod("waitUntilEmpty").invoke(b)
-      catch { case _: Throwable =>
-        try b.getClass.getMethod("waitUntilEmpty", classOf[Long])
-          .invoke(b, java.lang.Long.valueOf(5000L))
-        catch { case _: Throwable => () }
-      }
-    }
+    // Queries run sequentially, so a counter reset before each run and a
+    // drained read after it attribute cleanly — an undrained task-end
+    // tail would double-attribute to the next key, and min-of-5 would
+    // then systematically pick the most-undercounted sample (review r10).
+    val meter = new Harness.Meter(spark)
+    var samples: collection.Map[String, List[Double]] = Map.empty
+    val cpuSamples = scala.collection.mutable.LinkedHashMap[String, List[Double]]()
     def measurePass(): (String, String) = {
-      samples.clear(); cpuSamples.clear()
-      val lb = loadavg()
-      for (r <- 1 to 5; (name, fn) <- keys) {
-        drainListeners()
-        val t0 = System.nanoTime()
-        val c0 = cpuNs.get()
-        // a failed round is VISIBLE (stderr — stdout stays the JSON line)
-        // and contributes NO sample: its near-zero elapsed time would
-        // otherwise publish as a bogus fast min (the MiniBench rule)
-        try {
-          exec(fn(spark, sfDir), mode)
-          samples(name) =
-            (System.nanoTime() - t0) / 1e9 :: samples.getOrElse(name, Nil)
-          drainListeners()
-          cpuSamples(name) =
-            (cpuNs.get() - c0) / 1e9 :: cpuSamples.getOrElse(name, Nil)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name round $r FAILED: " +
+      cpuSamples.clear()
+      keys.foreach(cpuSamples(_) = Nil)
+      val lb = Harness.loadavg()
+      // a failed round is VISIBLE (stderr — stdout stays the JSON line)
+      samples = Harness.rounds(5, keys,
+        run = k => Harness.noop(queries(k)(spark, sfDir)),
+        failed = (name, r, e) => System.err.println(
+          s"[bench] $name round $r FAILED: " +
             s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}"
-              .take(300))
-          samples.getOrElseUpdate(name, Nil)
-          cpuSamples.getOrElseUpdate(name, Nil)
-        }
-      }
-      (lb, loadavg())
+              .take(300)),
+        before = _ => { Harness.drain(spark); meter.reset() },
+        after = name => {
+          Harness.drain(spark)
+          cpuSamples(name) = meter.cpuNs.get() / 1e9 :: cpuSamples(name)
+        })
+      (lb, Harness.loadavg())
     }
     // WINDOW GATE (VERDICT r14 #1): two rounds running, the official
     // artifact was recorded under co-tenant load that swamped every
@@ -181,36 +114,12 @@ object Bench {
       }
       if (tripped) gateStatus = "FAILED"
     }
-    // One-time series bridge (round 11): the official metric switched
-    // from count-mode to noop full materialization, so publish a
-    // count-mode total from the SAME run (3 interleaved rounds, same
-    // warm JVM, same data) — round-over-round deltas against the r≤10
-    // history read the bridge, new history reads the headline.
-    // SPARK_GRAFT_BENCH_BRIDGE=off drops it once the series re-bases.
-    val bridgeSamples =
-      scala.collection.mutable.LinkedHashMap[String, List[Double]]()
-    val bridge = mode == "noop" &&
-      !sys.env.get("SPARK_GRAFT_BENCH_BRIDGE").contains("off")
-    if (bridge) for (r <- 1 to 3; (name, fn) <- keys) {
-      val t0 = System.nanoTime()
-      try {
-        exec(fn(spark, sfDir), "count")
-        bridgeSamples(name) =
-          (System.nanoTime() - t0) / 1e9 :: bridgeSamples.getOrElse(name, Nil)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name bridge round $r FAILED: " +
-          e.getClass.getSimpleName)
-        bridgeSamples.getOrElseUpdate(name, Nil)
-      }
-    }
     // a key with zero successful rounds publishes -1.0 — an impossible
     // timing, unmistakably a failure flag rather than a fast min
-    val results = keys.map { case (name, _) =>
+    val results = keys.map { name =>
       name -> samples(name).minOption.getOrElse(-1.0) }
-    val medians = keys.map { case (name, _) =>
-      val ss = samples(name).sorted
-      name -> (if (ss.isEmpty) -1.0 else ss(ss.size / 2)) }
-    val cpuMins = keys.map { case (name, _) =>
+    val medians = keys.map(name => name -> Harness.p50(samples(name)))
+    val cpuMins = keys.map { name =>
       name -> cpuSamples(name).minOption.getOrElse(-1.0) }
     // a fully-failed key must never IMPROVE the headline number by
     // summing its -1.0 sentinel (ADVICE r9): any failure poisons the
@@ -222,11 +131,6 @@ object Bench {
       if (anyFailed || medians.isEmpty) -1.0 else medians.map(_._2).sum
     val totalCpu =
       if (anyFailed || cpuMins.isEmpty) -1.0 else cpuMins.map(_._2).sum
-    val bridgeMins = keys.map { case (name, _) =>
-      name -> bridgeSamples.getOrElse(name, Nil).minOption.getOrElse(-1.0) }
-    val totalBridge =
-      if (!bridge || bridgeMins.exists(_._2 < 0)) -1.0
-      else bridgeMins.map(_._2).sum
     // Host-load stamp (VERDICT r10 #3/#7): a loud co-tenant window is
     // machine-detectable from the loadavg bracket and the p50/min
     // spread instead of inferred from an implausible delta.
@@ -234,8 +138,7 @@ object Bench {
     // Full per-query timings → file: the driver's stdout tail capture is
     // ~2000 chars, so a 90+-query JSON line gets front-truncated and fails
     // its parse. The file holds everything; stdout gets a line that FITS.
-    def qjson(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    import Harness.qjson
     // Testdata fingerprint: ties this measurement to the exact bytes it
     // ran against. Cross-round per-query deltas are only meaningful when
     // the fingerprints match (the driver regenerates testdata between
@@ -243,11 +146,9 @@ object Bench {
     val dataFp = Tables.testdataFingerprint(sfDir)
     val fullJson =
       s"""{"metric":"total","value":$total,"unit":"sec","rounds":5,""" +
-        s""""mode":"$mode","queries":${qjson(results)},"total_p50":$totalP50,""" +
+        s""""mode":"noop","queries":${qjson(results)},"total_p50":$totalP50,""" +
         s""""queries_p50":${qjson(medians)},"total_cpu":$totalCpu,""" +
         s""""queries_cpu":${qjson(cpuMins)},""" +
-        s""""total_count_bridge":$totalBridge,""" +
-        s""""queries_count_bridge":${qjson(bridgeMins)},""" +
         s""""loadavg_before":"$loadBefore","loadavg_after":"$loadAfter",""" +
         s""""spread_p50_min":$spread,"sf":"$sfDir",""" +
         s""""window_gate":"$gateStatus","canary_ratio":$canaryRatio,""" +
@@ -283,7 +184,7 @@ object Bench {
       .mkString("{", ",", "}")
     val dataFpShort = graft.Tables.shortFp(dataFp)
     val pubTotal = if (gateStatus == "FAILED") -1.0 else total
-    println(s"""{"metric":"total","value":${r3(pubTotal)},"unit":"sec","mode":"$mode","n_queries":${results.size},"total_p50":${r3(totalP50)},"total_cpu":${r3(totalCpu)},"total_count_bridge":${r3(totalBridge)},"load_before":"$loadBefore","load_after":"$loadAfter","window_gate":"$gateStatus","canary_ratio":${r3(canaryRatio)},"queries":$hqs,"full_per_query":$fullRef,"data_fp":"$dataFpShort","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${r3(pubTotal)},"unit":"sec","mode":"noop","n_queries":${results.size},"total_p50":${r3(totalP50)},"total_cpu":${r3(totalCpu)},"load_before":"$loadBefore","load_after":"$loadAfter","window_gate":"$gateStatus","canary_ratio":${r3(canaryRatio)},"queries":$hqs,"full_per_query":$fullRef,"data_fp":"$dataFpShort","sf":"$sfDir"}""")
     spark.stop()
   }
 }

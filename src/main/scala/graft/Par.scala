@@ -30,8 +30,8 @@ object Par {
         try f.get()
         catch {
           case e: java.util.concurrent.ExecutionException =>
-            // cancel the siblings before rethrowing so no stray Spark
-            // jobs keep burning executors after the operator has failed
+            // best-effort: interrupts the siblings before rethrowing, but
+            // Spark jobs they already submitted keep running to the end
             pool.shutdownNow()
             fs.foreach(_.cancel(true))
             throw e.getCause

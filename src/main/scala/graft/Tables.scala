@@ -106,7 +106,7 @@ object Tables {
     shortFp(parts.mkString("|"))
   }
 
-  /** The ONE fingerprint format (32-bit Murmur hex) — Bench, MiniBench,
+  /** The ONE fingerprint format (32-bit Murmur hex) — Bench, Probe minibench,
     * and the per-table fingerprints must stay comparable, so every
     * stamp goes through here. */
   def shortFp(s: String): String =

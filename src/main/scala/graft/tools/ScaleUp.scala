@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Synthesize a larger scale factor from an existing one for SCALING.md
-  * measurements: `runMain graft.tools.ScaleUp <srcDir> <dstDir> <factor>`.
+  * measurements: `runMain graft.tools.Probe scaleup <src> <dst> <factor>`.
   *
   * Each replica i of the fact tables offsets every entity key by
   * i·10⁷, so referential integrity holds (each replica is a
@@ -24,15 +24,7 @@ import org.apache.spark.sql.functions._
 object ScaleUp {
   private val Off = 10000000L
 
-  def main(args: Array[String]): Unit = {
-    val Array(src, dst, f) = args.take(3)
-    val factor = f.toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def apply(spark: SparkSession, src: String, dst: String, factor: Int): Unit = {
     // events.ts physical layout varies by testdata generation (int64
     // nanos or timestamp[us]); copy it through untouched — Tables
     // normalizes at query time whatever the layout (nanosAsLong makes
@@ -83,115 +75,6 @@ object ScaleUp {
       stride = docStride), "documents")
     write(replicate(tbl("embeddings"), Seq("vec_id")), "embeddings")
     println(s"scaled $src x$factor -> $dst")
-    spark.stop()
-  }
-}
-
-/** Inverted-index sizing diagnostic:
-  * `runMain graft.tools.IndexStats <sfDir>` — prints the posting /
-  * bucket / candidate-pair volumes (Dedup.indexStats) that govern the
-  * dd04/dd06/dd10 cost at that corpus, one JSON line out.
-  */
-object IndexStats {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val r = graft.operators.Dedup.indexStats(spark, sfDir).head()
-    val cols = Seq("n_shingles", "n_postings", "n_buckets", "n_capped",
-      "max_df", "cand_pairs")
-    println(cols.zipWithIndex.map { case (c, i) =>
-      s""""$c":${r.getLong(i)}""" }.mkString("{", ",", s""","sf":"$sfDir"}"""))
-    spark.stop()
-  }
-}
-
-/** dd15 banding-volume diagnostic:
-  * `runMain graft.tools.Dd15Stats <sfDir>` — chunk/band/bucket/pair
-  * volumes of dd15's chunk-level LSH (Dedup.dd15Stats), one JSON line
-  * out, for SCALING.md decade attribution.
-  */
-object Dd15Stats {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val r = graft.operators.Dedup.dd15Stats(spark, sfDir).head()
-    val cols = Seq("n_chunks", "n_band_rows", "n_buckets", "n_overcap",
-      "max_bucket", "cand_pairs")
-    println(cols.zipWithIndex.map { case (c, i) =>
-      s""""$c":${r.getLong(i)}""" }.mkString("{", ",", s""","sf":"$sfDir"}"""))
-    spark.stop()
-  }
-}
-
-/** Targeted per-key bench for scaling curves:
-  * `runMain graft.tools.MiniBench <sfDir> <key1,key2,...>` — Bench's
-  * methodology (warm pass, then per-query min over 3 interleaved
-  * rounds, construction + execution timed) restricted to the listed
-  * keys, one JSON line out.
-  */
-object MiniBench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val keys = args(1).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    graft.Tables.all.foreach(n => graft.Tables(spark, sfDir, n).count())
-    graft.operators.DocstoreOps.ensureEventDocs(spark, sfDir)
-    // Official mode (round 11, matching Bench): a noop-format WRITE —
-    // count's Aggregate wrapper lets the optimizer prune columns and
-    // ELIMINATE joins whose non-projected side is unique; t14's whole
-    // bigram chain vanished under count (SCALING round-10b lesson).
-    // The noop sink keeps every output column, so the plan
-    // materializes fully. SPARK_GRAFT_BENCH_MODE=count restores the
-    // legacy metric for comparisons against r≤10 SCALING rows.
-    val noop = !sys.env.get("SPARK_GRAFT_BENCH_MODE").contains("count")
-    def run(k: String): Unit = {
-      val df = graft.SparkEntry.queries(k)(spark, sfDir)
-      if (noop) df.write.format("noop").mode("overwrite").save()
-      else df.count()
-    }
-    keys.foreach(k =>
-      try run(k)
-      catch { case e: Throwable => println(s"WARM FAIL $k: $e") })
-    val samples = scala.collection.mutable.LinkedHashMap[String, List[Double]]()
-    for (_ <- 1 to 3; k <- keys) {
-      val t0 = System.nanoTime()
-      // a failed round contributes NO sample — a swallowed failure's
-      // elapsed time would otherwise publish as a bogus fast min
-      try {
-        run(k)
-        samples(k) = (System.nanoTime() - t0) / 1e9 :: samples.getOrElse(k, Nil)
-      } catch { case e: Throwable =>
-        println(s"ROUND FAIL $k: ${e.getClass.getSimpleName}")
-        samples.getOrElseUpdate(k, Nil)
-      }
-    }
-    val qs = samples.map { case (k, v) =>
-      if (v.isEmpty) s""""$k":"FAILED""""
-      else f""""$k":${v.min}%.3f""" }.mkString("{", ",", "}")
-    // same attributability stamp as Bench: a timing is only comparable
-    // to another timing taken against the same testdata bytes
-    val fp = graft.Tables.shortFp(graft.Tables.testdataFingerprint(sfDir))
-    println(s"""{"queries":$qs,"data_fp":"$fp","sf":"$sfDir"}""")
-    spark.stop()
   }
 }
 
@@ -228,7 +111,7 @@ object MiniBench {
   * Plans execute via `toRdd.count()` — no driver-side row
   * materialization (ADVICE r9), and no `--add-opens` need since
   * external Date decoding never happens. One JSON line out; exit 1 on
-  * any cartesian or error. `runMain graft.tools.PlanSweep <sfDir>`.
+  * any cartesian or error. `runMain graft.tools.Probe plansweep [sfDir]`.
   */
 object PlanSweep {
   import org.apache.spark.sql.execution.SparkPlan
@@ -484,14 +367,10 @@ object PlanSweep {
     }
   }
 
-  def main(args: Array[String]): Unit = {
+  /** Sweep every registry key at `[sfDir]`; one JSON line out, exit
+    * code 1 on any hard-gate hit. */
+  def apply(spark: SparkSession, args: Seq[String]): Int = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val carts = scala.collection.mutable.ListBuffer[String]()
     val smjs = scala.collection.mutable.ListBuffer[String]()
     val globalWins = scala.collection.mutable.ListBuffer[String]()
@@ -618,8 +497,7 @@ object PlanSweep {
       s""""recursive_big_anchor":${arr(recursiveBig.distinct.toSeq)},""" +
       s""""multi_text_scans":${arr(multiTextScans.distinct.toSeq)},""" +
       s""""errors":${arr(errs.toSeq)},"sf":"$sfDir"}""")
-    spark.stop()
     if (carts.nonEmpty || errs.nonEmpty || ungatedCollects.nonEmpty ||
-      recursiveBig.nonEmpty || unboundedBcastHints.nonEmpty) sys.exit(1)
+      recursiveBig.nonEmpty || unboundedBcastHints.nonEmpty) 1 else 0
   }
 }
